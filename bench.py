@@ -96,7 +96,7 @@ def _engine_worker(n_iter: int) -> float:
     import numpy as np
 
     from text2nkg_spark.candidates import enumerate_triples
-    from text2nkg_spark.decode_core import decode_sentence_fast
+    from text2nkg_spark.decode_core import decode_sentence
     from text2nkg_spark.plans.pipeline import default_label_space
     from text2nkg_spark.scoring_core import hash_logits_batch, log_softmax
 
@@ -118,7 +118,7 @@ def _engine_worker(n_iter: int) -> float:
         lo = 0
         for _d, ents, cand in sents:
             hi = lo + cand.shape[0]
-            decode_sentence_fast(ents, cand, rel[lo:hi], q[lo:hi], space)
+            decode_sentence(ents, cand, rel[lo:hi], q[lo:hi], space)
             lo = hi
     return 256 * n_iter / (time.time() - t0)
 

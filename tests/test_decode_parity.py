@@ -202,7 +202,7 @@ def test_score_values_match_oracle():
 def test_fast_decode_equals_loop(e, seed):
     """Vectorized fast-path decode == loop decode, bit-for-bit."""
     from text2nkg_spark.decode_core import (
-        decode_sentence_arrays, decode_sentence_fast)
+        decode_sentence, decode_sentence_arrays)
 
     space = _space()
     rng = np.random.default_rng(1000 + seed)
@@ -210,43 +210,86 @@ def test_fast_decode_equals_loop(e, seed):
     cand = enumerate_triples(ents, 256)
     rel_lg = log_softmax(hash_logits(21, 5, cand[:, 4:10], space.num_classes, seed, 0))
     q_lg = log_softmax(hash_logits(21, 5, cand[:, 4:10], space.num_classes, seed, 1))
-    fast = decode_sentence_fast(ents, cand, rel_lg, q_lg, space)
+    fast = decode_sentence(ents, cand, rel_lg, q_lg, space)
     loop = decode_sentence_arrays(ents, cand, rel_lg, q_lg, space)
     assert fast == loop
 
 
 @pytest.mark.parametrize("seed", [0, 3, 9])
 def test_batched_decode_matches(seed):
-    """decode_sentences_batch (r7) == per-sentence decode_sentence for a
-    mixed bag of entity counts (grouped fast path + degenerate
-    fallbacks), bit-for-bit including scores and NMS order."""
+    """decode_sentences_batch == the per-sentence decoder each item routes
+    to, bit-for-bit including scores and NMS order, for a mixed bag of
+    entity counts (grouped full-grid path + degenerate fallbacks), plain,
+    same_entity and unidirect.  Logits come from every scorer the
+    extraction UDF batches: hash (float32, as the UDF stores them), gold
+    (many exact ties) and the mini model (float32)."""
     from text2nkg_spark.decode_core import (
-        decode_sentence, decode_sentences_batch)
+        decode_sentence_arrays, decode_sentence_unidirect,
+        decode_sentences_batch)
+    from text2nkg_spark.operators.model_scorer import ModelScorer
 
     space = _space()
-    rng = np.random.default_rng(2000 + seed)
-    items = []
-    rel_chunks, q_chunks = [], []
-    pos = 0
-    for si, e in enumerate([3, 5, 4, 2, 6, 3, 1, 12, 5, 4]):
-        ents = _random_entities(rng, e)
-        cand = enumerate_triples(ents, 256)
-        rel = log_softmax(hash_logits(
-            si, 7, cand[:, 4:10], space.num_classes, seed, 0)).astype(
-            np.float32)
-        q = log_softmax(hash_logits(
-            si, 7, cand[:, 4:10], space.num_classes, seed, 1)).astype(
-            np.float32)
-        items.append((ents, cand, pos, pos + cand.shape[0]))
-        rel_chunks.append(rel)
-        q_chunks.append(q)
-        pos += cand.shape[0]
-    rel_all = np.concatenate(rel_chunks)
-    q_all = np.concatenate(q_chunks)
+    rels, quals = make_synthetic_labels(6, 5)
+    model = ModelScorer("mini", max_seq_length=128, max_pair_length=16,
+                        num_classes=space.num_classes)
 
-    got = decode_sentences_batch(items, rel_all, q_all, space)
-    for (ents, cand, lo, hi), preds in zip(items, got):
-        want = decode_sentence(
-            ents, cand, rel_all[lo:hi], q_all[lo:hi], space,
-            same_entity=False, strict=True)
-        assert preds == want
+    def scored_bag(scorer):
+        rng = np.random.default_rng(2000 + seed)
+        items = []
+        rel_chunks, q_chunks = [], []
+        pos = 0
+        for si, e in enumerate([3, 5, 4, 2, 6, 3, 1, 12, 5, 4]):
+            ents = _random_entities(rng, e)
+            cand = enumerate_triples(ents, 256)
+            triples = cand[:, 4:10]
+            if scorer == "hash":
+                rel = log_softmax(hash_logits(
+                    si, 7, triples, space.num_classes, seed, 0)).astype(
+                    np.float32)
+                q = log_softmax(hash_logits(
+                    si, 7, triples, space.num_classes, seed, 1)).astype(
+                    np.float32)
+            elif scorer == "gold":
+                gold = []
+                if e >= 3:
+                    h, t, qq = (int(x) for x in rng.permutation(e)[:3])
+                    gold.append(
+                        (int(ents[h, 0]), int(ents[h, 1]), int(ents[t, 0]),
+                         int(ents[t, 1]), rels[int(rng.integers(6))],
+                         [(int(ents[qq, 0]), int(ents[qq, 1]),
+                           quals[int(rng.integers(5))])]))
+                gi = gold_orderings(gold, space.label_map())
+                rel, q = gold_logits(
+                    si, 7, triples, space.num_classes, gi, seed, 12.0)
+                rel, q = log_softmax(rel), log_softmax(q)
+            else:
+                tokens = [f"w{x}" for x in range(int(ents[-1, 1]) + 2)]
+                rel, q = model.score_sentence(tokens, ents, cand)
+                assert rel.dtype == np.float32
+                rel, q = log_softmax(rel), log_softmax(q)
+            items.append((ents, cand, pos, pos + cand.shape[0]))
+            rel_chunks.append(rel)
+            q_chunks.append(q)
+            pos += cand.shape[0]
+        return items, np.concatenate(rel_chunks), np.concatenate(q_chunks)
+
+    for scorer in ("hash", "gold", "model"):
+        items, rel_all, q_all = scored_bag(scorer)
+        for same_entity, unidirect in (
+                (False, False), (True, False), (False, True)):
+            got = decode_sentences_batch(
+                items, rel_all, q_all, space, same_entity=same_entity,
+                unidirect=unidirect)
+            n_preds = 0
+            for (ents, cand, lo, hi), preds in zip(items, got):
+                if unidirect:
+                    want = decode_sentence_unidirect(
+                        ents, cand, rel_all[lo:hi], q_all[lo:hi], space,
+                        same_entity)
+                else:
+                    want = decode_sentence_arrays(
+                        ents, cand, rel_all[lo:hi], q_all[lo:hi], space,
+                        same_entity=same_entity, strict=True)
+                assert preds == want, (scorer, same_entity, unidirect)
+                n_preds += len(preds)
+            assert n_preds > 0, (scorer, same_entity, unidirect)

@@ -150,3 +150,15 @@ def test_resume_key_covers_semantic_config(spark, tr, tmp_path_factory):
                  PipelineConfig(scorer="hash", eval_unidirect=True))
     fp_uni = man.read_meta("predictions")["input_fingerprint"]
     assert fp_uni not in (fp_before, fp_after)
+    # renaming a label at an unchanged label count renames emitted facts,
+    # so it must rebuild too
+    from text2nkg_spark.labels import LabelSpace, make_synthetic_labels
+
+    rels, quals = make_synthetic_labels(6, 5)
+    renamed = LabelSpace.build(["[r]renamed"] + rels[1:], quals)
+    out = run_pipeline(spark, tr, root,
+                       PipelineConfig(scorer="hash", eval_unidirect=True),
+                       space=renamed)
+    fp_ren = man.read_meta("predictions")["input_fingerprint"]
+    assert fp_ren not in (fp_before, fp_after, fp_uni)
+    assert out["predictions"].where(F.col("rel") == "[r]renamed").count() > 0

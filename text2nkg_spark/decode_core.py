@@ -2,12 +2,17 @@
 reference's eval decode (run_re.py:1293-1448), written tensor-first.
 
 Where the reference walks an insertion-ordered dict and sums python lists six
-times per triple, we build dense (E, E, E, C) score tensors per sentence and
-compute the full 6-permutation ensemble with five transposes + two
-fancy-index block swaps — the additions happen in the reference's exact
-sequence, so the float64 sums (and therefore every argmax and NMS ordering)
-are bit-identical to the oracle (text2nkg_spark/reference_oracle.py), which
-tests assert.
+times per triple, we build dense (B, E, E, E, C) score tensors for a batch of
+sentences with equal entity count and compute the full 6-permutation
+ensemble with five transposes + two fancy-index block swaps — the additions
+happen in the reference's exact sequence, so the float64 sums (and therefore
+every argmax and NMS ordering) are bit-identical to the oracle
+(text2nkg_spark/reference_oracle.py), which tests assert.
+
+:func:`decode_sentences_batch` is the one decode entry point; it routes
+each sentence to the batched tensor pipeline, the reference-order loop
+(:func:`decode_sentence_arrays`) or the unidirect ablation, and all three
+share one ensemble, one direction normalization and one greedy NMS.
 
 Ensemble algebra (sym block = ['NIL'], swap(x) = x[:1]+x[num:]+x[1:num]):
 
@@ -29,27 +34,17 @@ class MissingOrderingError(ValueError):
     run_re.py:1328/1343/1358/1373/1386)."""
 
 
-def ensemble_tensors(
-    e: int,
-    cand: np.ndarray,      # (N, 10) from candidates.enumerate_triples
-    rel_lg: np.ndarray,    # (N, C) float64
-    q_lg: np.ndarray,      # (N, C) float64
-    space: LabelSpace,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Returns (V, Qc, present) dense tensors over entity index triples."""
-    c = space.num_classes
-    s = np.zeros((e, e, e, c), dtype=np.float64)
-    q = np.zeros((e, e, e, c), dtype=np.float64)
-    present = np.zeros((e, e, e), dtype=bool)
-    ii, jj, kk = cand[:, 1], cand[:, 2], cand[:, 3]
-    s[ii, jj, kk] = rel_lg
-    q[ii, jj, kk] = q_lg
-    present[ii, jj, kk] = True
-
-    sw = space.swap_index()
+def _ensemble(
+    s: np.ndarray, q: np.ndarray, sw: np.ndarray,
+) -> tuple[np.ndarray, np.ndarray]:
+    """The 6-permutation ensemble (V, Qc) of dense (..., E, E, E, C) rel /
+    qualifier logit tensors; any leading axes are batch axes."""
+    lead = s.ndim - 4
 
     def t(x: np.ndarray, perm: tuple[int, int, int]) -> np.ndarray:
-        return np.transpose(x, perm + (3,))
+        return np.transpose(
+            x, tuple(range(lead)) + tuple(lead + p for p in perm)
+            + (lead + 3,))
 
     # addition sequence mirrors run_re.py:1317-1386 exactly (non-associative
     # float sums must run in the same order for bit parity)
@@ -69,105 +64,37 @@ def ensemble_tensors(
     qc += t(s, (2, 0, 1))[..., sw]  # swap(S[j,k,i])
     qc += t(s, (1, 2, 0))           # S[k,i,j]
     qc += t(q, (2, 1, 0))[..., sw]  # swap(Q[k,j,i])
+    return v, qc
+
+
+def ensemble_tensors(
+    e: int,
+    cand: np.ndarray,      # (N, 10) from candidates.enumerate_triples
+    rel_lg: np.ndarray,    # (N, C) float64
+    q_lg: np.ndarray,      # (N, C) float64
+    space: LabelSpace,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Returns (V, Qc, present) dense tensors over entity index triples."""
+    c = space.num_classes
+    s = np.zeros((e, e, e, c), dtype=np.float64)
+    q = np.zeros((e, e, e, c), dtype=np.float64)
+    present = np.zeros((e, e, e), dtype=bool)
+    ii, jj, kk = cand[:, 1], cand[:, 2], cand[:, 3]
+    s[ii, jj, kk] = rel_lg
+    q[ii, jj, kk] = q_lg
+    present[ii, jj, kk] = True
+    v, qc = _ensemble(s, q, space.swap_index())
     return v, qc, present
 
 
-def _nms(results: list[tuple], label_list: list[str]) -> list[tuple]:
-    """Stable-sort + greedy NMS + projection (run_re.py:1422-1493 tail).
-
-    r7: the kept-set span/label columns live in preallocated arrays
-    compared on ``[:k]`` slices — the previous list->np.array rebuild per
-    candidate was O(k) allocations each; the comparisons (and therefore
-    the kept set) are unchanged."""
-    if not results:
-        return []
-    n = len(results)
-    scores = np.array([r[0] for r in results])
-    order = np.argsort(-scores, kind="stable")
-
-    ks = np.empty((8, n), dtype=np.int64)
-    a1s, a1e, a2s, a2e, a3s, a3e, arel, aq = ks
-    kept: list[tuple] = []
-    k = 0
-    for oi in order:
-        item = results[int(oi)]
-        m1, m2, m3 = item[1], item[2], item[5]
-        if k:
-            ov1 = ((a1s[:k] <= m1[0]) & (m1[0] <= a1e[:k])) | (
-                (m1[0] <= a1s[:k]) & (a1s[:k] <= m1[1]))
-            ov2 = ((a2s[:k] <= m2[0]) & (m2[0] <= a2e[:k])) | (
-                (m2[0] <= a2s[:k]) & (a2s[:k] <= m2[1]))
-            ov3 = ((a3s[:k] <= m3[0]) & (m3[0] <= a3e[:k])) | (
-                (m3[0] <= a3s[:k]) & (a3s[:k] <= m3[1]))
-            clash = (
-                (arel[:k] == item[3]) & ov1 & ov2
-                & (aq[:k] == item[6]) & ov3
-            ).any()
-            if clash:
-                continue
-        kept.append(item)
-        a1s[k] = m1[0]; a1e[k] = m1[1]  # noqa: E702
-        a2s[k] = m2[0]; a2e[k] = m2[1]  # noqa: E702
-        a3s[k] = m3[0]; a3e[k] = m3[1]  # noqa: E702
-        arel[k] = item[3]; aq[k] = item[6]  # noqa: E702
-        k += 1
-
-    out = []
-    for score, m1, m2, pred, q_score, m3, q_pred in kept:
-        out.append(
-            (m1[0], m1[1], m2[0], m2[1], label_list[pred],
-             m3[0], m3[1], label_list[q_pred], score, q_score))
-    return out
-
-
-# i<j<k anchor index triples per entity count, cached: the meshgrid +
-# mask build was ~25% of a small sentence's decode and is a pure function
-# of E (bounded by max mentions per sentence, so the cache stays tiny)
-_ANCHOR_CACHE: dict[int, tuple] = {}
-
-
-def _anchor_triples(e: int) -> tuple:
-    got = _ANCHOR_CACHE.get(e)
-    if got is None:
-        idx = np.arange(e, dtype=np.int64)
-        ii, jj, kk = np.meshgrid(idx, idx, idx, indexing="ij")
-        sel = (ii < jj) & (jj < kk)
-        got = _ANCHOR_CACHE[e] = (ii[sel], jj[sel], kk[sel])
-    return got
-
-
-def decode_sentence_fast(
-    entities: np.ndarray,
-    cand: np.ndarray,
-    rel_lg: np.ndarray,
-    q_lg: np.ndarray,
-    space: LabelSpace,
-    strict: bool = True,
-) -> list[tuple]:
-    """Vectorized decode for the full-grid case (cand covers all E^3
-    orderings and entity spans are distinct).  Anchors are exactly the
-    i<j<k index triples in lexicographic order (= first-encountered
-    orientation under the reference's insertion-ordered dict walk); the
-    direction normalization runs as numpy masks.  Bit-identical to
-    :func:`decode_sentence_arrays` (tests assert)."""
-    e = entities.shape[0]
-    if e < 3 or cand.shape[0] != e * e * e:
-        return decode_sentence_arrays(
-            entities, cand, rel_lg, q_lg, space, same_entity=False,
-            strict=strict)
-    v, qc, _present = ensemble_tensors(e, cand, rel_lg, q_lg, space)
-
-    ii, jj, kk = _anchor_triples(e)  # lexicographic anchor order
-
-    pred = np.argmax(v[ii, jj, kk], axis=-1)
-    q_pred = np.argmax(qc[ii, jj, kk], axis=-1)
-    keep = (pred > 0) & (q_pred > 0)
-    ii, jj, kk = ii[keep], jj[keep], kk[keep]
-    pred, q_pred = pred[keep], q_pred[keep]
-    if pred.size == 0:
-        return []
-
-    a1, a2, a3 = ii.copy(), jj.copy(), kk.copy()
+def _normalize_directions(
+    a1: np.ndarray, a2: np.ndarray, a3: np.ndarray,
+    pred: np.ndarray, q_pred: np.ndarray, space: LabelSpace,
+) -> np.ndarray:
+    """Direction normalization (run_re.py:1391-1415) over candidate arrays,
+    in place: inverse labels fold back to forward ones by permuting the
+    entity slots a1/a2/a3, and a '[k]' relation trades places with the
+    qualifier.  Returns the mask of candidates the reference keeps."""
     num_label = space.num_label
     is_k = space.is_k()
     is_r = space.is_r()
@@ -191,21 +118,76 @@ def decode_sentence_fast(
     pred[m] = q_pred[m]
     q_pred[m] = tmp
 
-    drop = drop | (is_r[pred] & is_r[q_pred])
-    ok = ~drop
-    if not ok.any():
+    return ~(drop | (is_r[pred] & is_r[q_pred]))
+
+
+def greedy_nms(scores: np.ndarray, cols: np.ndarray) -> list[int]:
+    """Stable ``-score`` sort + greedy NMS (run_re.py:1422-1448).
+
+    ``cols`` is (W, n) int: rows 0-5 are the m1/m2/m3 (start, end) spans,
+    rows 6.. are label ids.  An item is dropped when an already-kept item
+    has equal labels and overlaps it (``is_overlap``) on all three spans.
+    Returns the kept indices in keep order.  The kept items' columns live
+    in one preallocated array, compared against each item on ``[:, :k]``
+    slices with all three spans and all labels in one operation each."""
+    order = np.argsort(-scores, kind="stable")
+    per = cols.T[:, :, None]  # (n, W, 1): each item's column vector
+    acc = np.empty_like(cols)
+    starts, ends, labels = acc[0:6:2], acc[1:6:2], acc[6:]
+    kept: list[int] = []
+    for oi in order.tolist():
+        k = len(kept)
+        if k:
+            c = per[oi]
+            cs, ce = c[0:6:2], c[1:6:2]
+            ks, ke = starts[:, :k], ends[:, :k]
+            ov = ((ks <= cs) & (cs <= ke)) | ((cs <= ks) & (ks <= ce))
+            if (ov.all(axis=0) & (labels[:, :k] == c[6:]).all(axis=0)).any():
+                continue
+        acc[:, k] = cols[:, oi]
+        kept.append(oi)
+    return kept
+
+
+def _candidate_cols(ents, a1, a2, a3, pred, q_pred) -> np.ndarray:
+    """(8, n) NMS columns: the spans of entities a1/a2/a3, then the labels."""
+    return np.vstack((ents[a1].T, ents[a2].T, ents[a3].T, pred, q_pred))
+
+
+def _nms(sc, qsc, cols: np.ndarray, label_list: list[str]) -> list[tuple]:
+    """Greedy NMS over one sentence's decoded candidates, projected to
+    output_preds rows (run_re.py:1422-1493 tail)."""
+    if not len(sc):
         return []
-
-    sc = v[ii, jj, kk, pred]
-    qsc = qc[ii, jj, kk, q_pred]
-
-    spans = [tuple(int(x) for x in row) for row in entities]
-    results = [
-        (float(sc[t]), spans[a1[t]], spans[a2[t]], int(pred[t]),
-         float(qsc[t]), spans[a3[t]], int(q_pred[t]))
-        for t in np.nonzero(ok)[0]
+    kept = greedy_nms(sc, cols)
+    return [
+        (m1s, m1e, m2s, m2e, label_list[pred], m3s, m3e, label_list[q_pred],
+         score, q_score)
+        for (m1s, m1e, m2s, m2e, m3s, m3e, pred, q_pred), score, q_score
+        in zip(cols[:, kept].T.tolist(), sc[kept].tolist(),
+               qsc[kept].tolist())
     ]
-    return _nms(results, space.label_list)
+
+
+# candidates per batched tensor pass (a pass holds at least one sentence):
+# bounds the five float64 (B, E^3, C) arrays a pass keeps alive at once
+# (~4 MB at C = 23), which a Python worker's heap then retains
+_PASS_CANDIDATES = 4096
+
+# i<j<k anchor index triples per entity count, cached: the meshgrid +
+# mask build was ~25% of a small sentence's decode and is a pure function
+# of E (bounded by max mentions per sentence, so the cache stays tiny)
+_ANCHOR_CACHE: dict[int, tuple] = {}
+
+
+def _anchor_triples(e: int) -> tuple:
+    got = _ANCHOR_CACHE.get(e)
+    if got is None:
+        idx = np.arange(e, dtype=np.int64)
+        ii, jj, kk = np.meshgrid(idx, idx, idx, indexing="ij")
+        sel = (ii < jj) & (jj < kk)
+        got = _ANCHOR_CACHE[e] = (ii[sel], jj[sel], kk[sel])
+    return got
 
 
 def decode_sentences_batch(
@@ -217,48 +199,45 @@ def decode_sentences_batch(
     strict: bool = True,
     unidirect: bool = False,
 ) -> list:
-    """Batched twin of :func:`decode_sentence` over many sentences (r7).
+    """The decode entry point: one list of output_preds rows per item, in
+    input order, each row
+    (m1s, m1e, m2s, m2e, rel_name, m3s, m3e, qual_name, rel_score, q_score).
 
-    Sentences eligible for the vectorized fast path (full E^3 candidate
-    grid, same_entity off) are grouped by entity count and decoded as
-    ONE (B, E, E, E, C) tensor pipeline: in the full-grid case the
-    candidate rows are exactly lexicographic (i, j, k) order, so the
-    per-sentence scatter is a pure reshape, and every ensemble addition,
-    argmax, direction-normalization mask and score gather is the same
-    elementwise operation decode_sentence_fast performs — just across a
-    leading batch axis, so the ~30 numpy dispatches per sentence
-    amortize over the group.  np.nonzero flattens row-major, so within
-    each sentence candidate order (and therefore NMS input order) is
-    identical to the per-sentence path; outputs are bit-identical
+    Full-grid sentences (same_entity off, E >= 3, all E^3 orderings
+    present) are grouped by entity count, in passes of at most
+    ``_PASS_CANDIDATES`` candidates, and each pass is decoded as ONE
+    (B, E, E, E, C) tensor pipeline: their candidate rows are exactly
+    lexicographic (i, j, k) order, so the per-sentence scatter is a pure
+    reshape.  Anchors are the i<j<k index triples in lexicographic order
+    (= the first-encountered orientation under the reference's
+    insertion-ordered dict walk), and np.nonzero flattens row-major, so
+    each sentence's NMS input order is the reference's.  ``unidirect``
+    items go to :func:`decode_sentence_unidirect`; same_entity, E < 3 and
+    pruned grids go to the reference-order loop
+    :func:`decode_sentence_arrays`.  Outputs are bit-identical to both
     (tests/test_decode_parity.py::test_batched_decode_matches).
-    Ineligible sentences fall back to the per-sentence decoders.
-    Returns one preds list per input item, in input order.
     """
     out: list = [None] * len(items)
-    if same_entity or unidirect:
-        for ix, (ents, cand, lo, hi) in enumerate(items):
-            out[ix] = decode_sentence(
-                ents, cand, rel_all[lo:hi], q_all[lo:hi], space,
-                same_entity, strict, unidirect)
-        return out
-    groups: dict[int, list[int]] = {}
+    groups: dict[tuple[int, int], list[int]] = {}
+    seen: dict[int, int] = {}
     for ix, (ents, cand, lo, hi) in enumerate(items):
         e = ents.shape[0]
-        if e >= 3 and cand.shape[0] == e * e * e:
-            groups.setdefault(e, []).append(ix)
-        else:
+        if unidirect:
+            out[ix] = decode_sentence_unidirect(
+                ents, cand, rel_all[lo:hi], q_all[lo:hi], space, same_entity)
+        elif same_entity or e < 3 or cand.shape[0] != e * e * e:
             out[ix] = decode_sentence_arrays(
                 ents, cand, rel_all[lo:hi], q_all[lo:hi], space,
-                same_entity=False, strict=strict)
+                same_entity, strict)
+        else:
+            k = seen[e] = seen.get(e, -1) + 1  # k-th sentence with E = e
+            groups.setdefault(
+                (e, k * e ** 3 // _PASS_CANDIDATES), []).append(ix)
 
     c = space.num_classes
     sw = space.swap_index()
-    num_label = space.num_label
-    is_k = space.is_k()
-    is_r = space.is_r()
     label_list = space.label_list
-
-    for e, idxs in groups.items():
+    for (e, _pass), idxs in groups.items():
         nb = len(idxs)
         e3 = e * e * e
         s = np.empty((nb, e3, c), dtype=np.float64)
@@ -267,82 +246,34 @@ def decode_sentences_batch(
             _ents, _cand, lo, hi = items[ix]
             s[b] = rel_all[lo:hi]
             q[b] = q_all[lo:hi]
-        s = s.reshape(nb, e, e, e, c)
-        q = q.reshape(nb, e, e, e, c)
-
-        def t(x: np.ndarray, perm: tuple[int, int, int]) -> np.ndarray:
-            return np.transpose(
-                x, (0,) + tuple(p + 1 for p in perm) + (4,))
-
-        # identical term order to ensemble_tensors (bit parity)
-        v = s.copy()
-        v += t(s, (1, 0, 2))[..., sw]
-        v += t(q, (0, 2, 1))
-        v += t(q, (2, 0, 1))
-        v += t(q, (1, 2, 0))[..., sw]
-        v += t(s, (2, 1, 0))
-        qc = q.copy()
-        qc += t(q, (1, 0, 2))
-        qc += t(s, (0, 2, 1))
-        qc += t(s, (2, 0, 1))[..., sw]
-        qc += t(s, (1, 2, 0))
-        qc += t(q, (2, 1, 0))[..., sw]
+        v, qc = _ensemble(
+            s.reshape(nb, e, e, e, c), q.reshape(nb, e, e, e, c), sw)
 
         ii, jj, kk = _anchor_triples(e)
         pred = np.argmax(v[:, ii, jj, kk, :], axis=-1)
         q_pred = np.argmax(qc[:, ii, jj, kk, :], axis=-1)
-        keep = (pred > 0) & (q_pred > 0)
-        bs, asel = np.nonzero(keep)  # row-major: per-sentence order kept
-        if bs.size == 0:
-            for ix in idxs:
-                out[ix] = []
-            continue
-        a1 = ii[asel].copy()
-        a2 = jj[asel].copy()
-        a3 = kk[asel].copy()
-        pr = pred[bs, asel]
-        qp = q_pred[bs, asel]
-
-        m = pr >= num_label
-        pr[m] = pr[m] - num_label + 1
-        a1[m], a2[m] = a2[m], a1[m].copy()
-
-        m = qp >= num_label
-        t1, t2, t3 = a3[m], a1[m].copy(), a2[m].copy()
-        a1[m], a2[m], a3[m] = t1, t2, t3
-        tmp = pr[m].copy()
-        pr[m] = qp[m] - num_label + 1
-        qp[m] = tmp
-
-        m = is_k[pr]
-        drop = m & is_k[qp]
-        m = m & ~drop
-        a2[m], a3[m] = a3[m], a2[m].copy()
-        tmp = pr[m].copy()
-        pr[m] = qp[m]
-        qp[m] = tmp
-
-        drop = drop | (is_r[pr] & is_r[qp])
-        okidx = np.nonzero(~drop)[0]
-
+        # row-major: each sentence's candidates stay in anchor order
+        bs, asel = np.nonzero((pred > 0) & (q_pred > 0))
         iia, jja, kka = ii[asel], jj[asel], kk[asel]
+        a1, a2, a3 = iia.copy(), jja.copy(), kka.copy()
+        pr, qp = pred[bs, asel], q_pred[bs, asel]
+        ok = _normalize_directions(a1, a2, a3, pr, qp, space)
+        bs, pr, qp = bs[ok], pr[ok], qp[ok]
+        iia, jja, kka = iia[ok], jja[ok], kka[ok]
+
+        # run_re.py:1417-1418 — scores index the BASE-orientation ensemble
+        # vectors at the direction-NORMALIZED labels, not at the argmax
         sc = v[bs, iia, jja, kka, pr]
         qsc = qc[bs, iia, jja, kka, qp]
-
-        bs_ok = bs[okidx]
+        # entity ids offset into the group's stacked (B*E, 2) span matrix
+        base = bs * e
+        cols = _candidate_cols(
+            np.concatenate([items[ix][0] for ix in idxs]),
+            base + a1[ok], base + a2[ok], base + a3[ok], pr, qp)
+        cuts = np.searchsorted(bs, np.arange(nb + 1))
         for b, ix in enumerate(idxs):
-            lo_b = np.searchsorted(bs_ok, b, side="left")
-            hi_b = np.searchsorted(bs_ok, b, side="right")
-            if lo_b == hi_b:
-                out[ix] = []
-                continue
-            spans = [tuple(int(x) for x in row) for row in items[ix][0]]
-            results = [
-                (float(sc[w]), spans[a1[w]], spans[a2[w]], int(pr[w]),
-                 float(qsc[w]), spans[a3[w]], int(qp[w]))
-                for w in okidx[lo_b:hi_b]
-            ]
-            out[ix] = _nms(results, label_list)
+            sl = slice(cuts[b], cuts[b + 1])
+            out[ix] = _nms(sc[sl], qsc[sl], cols[:, sl], label_list)
     return out
 
 
@@ -355,7 +286,8 @@ def decode_sentence_arrays(
     same_entity: bool = False,
     strict: bool = True,
 ) -> list[tuple]:
-    """Decode one sentence.  Returns output_preds rows in emission order:
+    """Decode one sentence by walking its candidates in enumeration order
+    (the reference's loop).  Returns output_preds rows in emission order:
     (m1s, m1e, m2s, m2e, rel_name, m3s, m3e, qual_name, rel_score, q_score).
     """
     e = entities.shape[0]
@@ -366,7 +298,6 @@ def decode_sentence_arrays(
     pv = np.argmax(v, axis=-1)
     pq = np.argmax(qc, axis=-1)
 
-    label_list = space.label_list
     num_label = space.num_label
     n_sym = 1
     is_k = space.is_k()
@@ -374,7 +305,9 @@ def decode_sentence_arrays(
 
     spans = [tuple(int(x) for x in row) for row in entities]
     visited = np.zeros((e, e, e), dtype=bool)
-    results: list[tuple] = []  # (score, m1, m2, rel_id, q_score, m3, q_id)
+    scores: list[float] = []
+    q_scores: list[float] = []
+    cols: list[tuple] = []  # (m1s, m1e, m2s, m2e, m3s, m3e, rel_id, q_id)
 
     perms = ((1, 0, 2), (0, 2, 1), (1, 2, 0), (2, 0, 1), (2, 1, 0))
     for row in cand:
@@ -416,11 +349,14 @@ def decode_sentence_arrays(
                 continue
             # run_re.py:1417-1418 — scores index the BASE-orientation ensemble
             # vectors at the direction-NORMALIZED labels, not at the argmax
-            results.append(
-                (float(v[i, j, k, pred]), m1, m2, pred,
-                 float(qc[i, j, k, q_pred]), m3, q_pred))
+            scores.append(float(v[i, j, k, pred]))
+            q_scores.append(float(qc[i, j, k, q_pred]))
+            cols.append((*m1, *m2, *m3, pred, q_pred))
 
-    return _nms(results, label_list)
+    return _nms(
+        np.array(scores, dtype=np.float64),
+        np.array(q_scores, dtype=np.float64),
+        np.array(cols, dtype=np.int64).reshape(-1, 8).T, space.label_list)
 
 
 def decode_sentence_unidirect(
@@ -452,56 +388,21 @@ def decode_sentence_unidirect(
     pred = np.argmax(rel_lg, axis=-1)
     q_pred = np.argmax(q_lg, axis=-1)
 
-    spans = [tuple(int(x) for x in row) for row in entities]
     keep = (pred > 0) & (q_pred > 0)
     if not same_entity:
-        sp = np.asarray(spans, dtype=np.int64)
         keep &= (
-            (sp[ii] != sp[jj]).any(axis=1)
-            & (sp[jj] != sp[kk]).any(axis=1)
-            & (sp[kk] != sp[ii]).any(axis=1))
+            (entities[ii] != entities[jj]).any(axis=1)
+            & (entities[jj] != entities[kk]).any(axis=1)
+            & (entities[kk] != entities[ii]).any(axis=1))
     rows = np.nonzero(keep)[0]
-    if rows.size == 0:
-        return []
     a1, a2, a3 = ii[rows].copy(), jj[rows].copy(), kk[rows].copy()
     pred, q_pred = pred[rows].copy(), q_pred[rows].copy()
-
-    num_label = space.num_label
-    is_k = space.is_k()
-    is_r = space.is_r()
-
-    m = pred >= num_label
-    pred[m] = pred[m] - num_label + 1
-    a1[m], a2[m] = a2[m], a1[m].copy()
-
-    m = q_pred >= num_label
-    t1, t2, t3 = a3[m], a1[m].copy(), a2[m].copy()
-    a1[m], a2[m], a3[m] = t1, t2, t3
-    tmp = pred[m].copy()
-    pred[m] = q_pred[m] - num_label + 1
-    q_pred[m] = tmp
-
-    m = is_k[pred]
-    drop = m & is_k[q_pred]
-    m = m & ~drop
-    a2[m], a3[m] = a3[m], a2[m].copy()
-    tmp = pred[m].copy()
-    pred[m] = q_pred[m]
-    q_pred[m] = tmp
-
-    drop = drop | (is_r[pred] & is_r[q_pred])
-    ok = ~drop
-    if not ok.any():
-        return []
-
-    sc = rel_lg[rows, pred]
-    qsc = q_lg[rows, q_pred]
-    results = [
-        (float(sc[t]), spans[a1[t]], spans[a2[t]], int(pred[t]),
-         float(qsc[t]), spans[a3[t]], int(q_pred[t]))
-        for t in np.nonzero(ok)[0]
-    ]
-    return _nms(results, space.label_list)
+    ok = _normalize_directions(a1, a2, a3, pred, q_pred, space)
+    rows, pred, q_pred = rows[ok], pred[ok], q_pred[ok]
+    return _nms(
+        rel_lg[rows, pred], q_lg[rows, q_pred],
+        _candidate_cols(entities, a1[ok], a2[ok], a3[ok], pred, q_pred),
+        space.label_list)
 
 
 def decode_sentence(
@@ -514,13 +415,8 @@ def decode_sentence(
     strict: bool = True,
     unidirect: bool = False,
 ) -> list[tuple]:
-    """Dispatcher: vectorized fast path when its preconditions hold
-    (same_entity off + full candidate grid), reference loop otherwise;
-    ``unidirect=True`` selects the no-ensemble ablation decode."""
-    if unidirect:
-        return decode_sentence_unidirect(
-            entities, cand, rel_lg, q_lg, space, same_entity)
-    if not same_entity:
-        return decode_sentence_fast(entities, cand, rel_lg, q_lg, space, strict)
-    return decode_sentence_arrays(
-        entities, cand, rel_lg, q_lg, space, same_entity, strict)
+    """Decode one sentence: :func:`decode_sentences_batch` on a batch of
+    one (``unidirect=True`` selects the no-ensemble ablation decode)."""
+    return decode_sentences_batch(
+        [(entities, cand, 0, cand.shape[0])], rel_lg, q_lg, space,
+        same_entity, strict, unidirect)[0]

@@ -22,6 +22,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from text2nkg_spark.decode_core import greedy_nms
+
 # np.transpose axes that realize X[i,j,k] = S[perm] (see decode_core)
 _AX = {
     "jik": (1, 0, 2), "ikj": (0, 2, 1), "jki": (2, 0, 1),
@@ -77,30 +79,6 @@ def _ensemble_multi(e: int, cand: np.ndarray, heads: dict, schema: str):
         for target, source in mapping.items():
             out[target] += np.transpose(dense[source], ax)
     return out, present
-
-
-def _nms_multi(results: list[tuple], extra_eq: int) -> list[tuple]:
-    """Greedy NMS: clash requires equal pred + q_pred (+ ``extra_eq`` more
-    trailing label fields) and triple-wise span overlap.
-    Result tuples: (score, m1, m2, pred, q_score, m3, q_pred, *extras)."""
-
-    def ov(a, b):
-        return (b[0] <= a[0] <= b[1]) or (a[0] <= b[0] <= a[1])
-
-    order = np.argsort(-np.array([r[0] for r in results]), kind="stable")
-    kept: list[tuple] = []
-    for oi in order:
-        it = results[int(oi)]
-        clash = False
-        for x in kept:
-            if (it[3] == x[3] and ov(it[1], x[1]) and ov(it[2], x[2])
-                    and it[6] == x[6] and ov(it[5], x[5])
-                    and all(it[7 + z] == x[7 + z] for z in range(extra_eq))):
-                clash = True
-                break
-        if not clash:
-            kept.append(it)
-    return kept
 
 
 def decode_sentence_multi(
@@ -163,8 +141,11 @@ def decode_sentence_multi(
 
     if not results:
         return []
-    extra = {"event": 2, "role": 1, "hypergraph": 0}[schema]
-    kept = _nms_multi(results, extra)
+    # the extra label fields (event qb/qc, role qb) must match too
+    kept = [results[i] for i in greedy_nms(
+        np.array([r[0] for r in results]),
+        np.array([(*r[1], *r[2], *r[5], r[3], r[6], *r[7:])
+                  for r in results], dtype=np.int64).T)]
 
     out = []
     for it in kept:

@@ -1,10 +1,13 @@
 """Candidate scoring + decode — the two Arrow UDF families (SURVEY.md §2.9).
 
-Fused path (default for deterministic scorers)
-    One ``mapInPandas`` pass per turn row: enumerate span triples (C3),
-    score (M1-M5 stand-in), 6-permutation ensemble + direction normalize +
-    NMS (D2-D5), project fact texts (G1).  Logits never become Spark rows, so
-    extraction is SHUFFLE-FREE end to end — scan → mapInPandas → facts.
+Fused path (every scorer; what the pipeline runs)
+    One ``mapInPandas`` pass over the flat sentence rows (text, m_starts,
+    m_ends).  Per Arrow batch: enumerate span triples (C3), score them
+    into one logit matrix (M1-M5 stand-in), decode the whole batch with
+    one ``decode_sentences_batch`` call (6-permutation ensemble + direction
+    normalize + NMS, D2-D5), project fact texts (G1).  Logits never become
+    Spark rows, so extraction is SHUFFLE-FREE end to end — scan →
+    mapInPandas → facts.
     This is the 100 TB plan: throughput scales linearly with input splits and
     there is no wide dependency to skew.
 
@@ -154,19 +157,8 @@ def _gold_rel_tuples(rels) -> list:
     return out
 
 
-def _mention_array(mentions) -> np.ndarray:
-    if mentions is None or len(mentions) == 0:
-        return np.empty((0, 2), dtype=np.int64)
-    rows = [
-        (int(m["start"]), int(m["end"])) if isinstance(m, dict)
-        else (int(m.start), int(m.end))
-        for m in mentions
-    ]
-    return np.asarray(rows, dtype=np.int64)
-
-
 def _flat_mention_array(starts, ends) -> np.ndarray:
-    """(starts, ends) int arrays -> (E, 2) span matrix (fast Arrow path)."""
+    """(m_starts, m_ends) int arrays -> (E, 2) span matrix."""
     if starts is None or len(starts) == 0:
         return np.empty((0, 2), dtype=np.int64)
     return np.column_stack(
@@ -179,11 +171,10 @@ def extract_facts_fused(df, cfg: PipelineConfig, space: LabelSpace):
     Input columns (flat Arrow-friendly contract — struct/token arrays cost
     ~2x in Arrow->pandas conversion): conv_id, turn_idx, text (string),
     m_starts (array<int>), m_ends (array<int>); plus gold_relations when
-    cfg.scorer == 'gold'.  The legacy (tokens, mentions) contract is also
-    accepted.
+    cfg.scorer == 'gold'.  Each Arrow batch is enumerated, scored into one
+    logit matrix and decoded by one ``decode_sentences_batch`` call.
     """
     use_gold = cfg.scorer == "gold"
-    flat = "m_starts" in df.columns
     identity = cfg.tokenizer == "identity"
     strict = identity  # pruned orderings only exist under wordpiece
 
@@ -193,31 +184,23 @@ def extract_facts_fused(df, cfg: PipelineConfig, space: LabelSpace):
             out: list[tuple] = []
             conv_ids = pdf["conv_id"].to_numpy()
             turn_idxs = pdf["turn_idx"].to_numpy()
-            if flat:
-                text_col = pdf["text"].to_numpy()
-                starts_col = pdf["m_starts"].to_numpy()
-                ends_col = pdf["m_ends"].to_numpy()
-            else:
-                tokens_col = pdf["tokens"].to_numpy()
-                mentions_col = pdf["mentions"].to_numpy()
+            text_col = pdf["text"].to_numpy()
+            starts_col = pdf["m_starts"].to_numpy()
+            ends_col = pdf["m_ends"].to_numpy()
             gold_col = pdf["gold_relations"].to_numpy() if use_gold else None
 
             # phase 1 — enumerate all sentences in the batch
             sent: list[tuple] = []  # (row, doc_id, ents, cand, lo, hi)
             pos = 0
             for r in range(len(pdf)):
-                if flat:
-                    ents = _flat_mention_array(starts_col[r], ends_col[r])
-                else:
-                    ents = _mention_array(mentions_col[r])
+                ents = _flat_mention_array(starts_col[r], ends_col[r])
                 if ents.shape[0] == 0:
                     continue
                 if identity:
                     cand = enumerate_triples(ents, cfg.max_seq_length)
                 else:
-                    toks_r = (text_col[r].split(" ") if flat
-                              else list(tokens_col[r]))
-                    cand = _enumerate(cfg, ents, toks_r, tokenizer)
+                    cand = _enumerate(
+                        cfg, ents, text_col[r].split(" "), tokenizer)
                 if cand.shape[0] == 0:
                     continue
                 sent.append((r, stable_doc_id(conv_ids[r]), ents, cand,
@@ -227,13 +210,14 @@ def extract_facts_fused(df, cfg: PipelineConfig, space: LabelSpace):
                 yield _empty_fact_frame()
                 continue
 
-            # phase 2 — score the whole batch vectorized, in cache-sized
-            # slices: every op is elementwise/row-wise so values are
-            # identical, but a ~32k-candidate working set (~5 MB) stays
-            # L2/L3-resident instead of streaming tens of MB through the
-            # shared memory bus per batch — measurably better multi-worker
-            # scaling on bandwidth-bound executors
+            # phase 2 — score the whole batch into one (N, C) logit pair
             if cfg.scorer == "hash":
+                # vectorized, in cache-sized slices: every op is
+                # elementwise/row-wise so values are identical, but a
+                # ~32k-candidate working set (~5 MB) stays L2/L3-resident
+                # instead of streaming tens of MB through the shared memory
+                # bus per batch — measurably better multi-worker scaling on
+                # bandwidth-bound executors
                 all_triples = np.concatenate([s[3][:, 4:10] for s in sent])
                 doc_arr = np.concatenate(
                     [np.full(s[5] - s[4], s[1], dtype=np.int64) for s in sent])
@@ -259,38 +243,36 @@ def extract_facts_fused(df, cfg: PipelineConfig, space: LabelSpace):
                     rel_all[sl] = r_
                     q_all[sl] = q_
             else:
-                rel_all = q_all = None
-
-            # phase 3 — decode: hash-scored batches go through the
-            # batched fast decoder (one tensor pipeline per entity-count
-            # group — bit-identical outputs, see decode_sentences_batch),
-            # other scorers keep the per-sentence loop
-            batched = None
-            if rel_all is not None:
-                batched = decode_sentences_batch(
-                    [(s_[2], s_[3], s_[4], s_[5]) for s_ in sent],
-                    rel_all, q_all, space,
-                    same_entity=cfg.same_entity, strict=strict,
-                    unidirect=cfg.eval_unidirect)
-            for si, (r, doc_id, ents, cand, lo, hi) in enumerate(sent):
-                conv_id = conv_ids[r]
-                turn_idx = int(turn_idxs[r])
-                if batched is not None:
-                    preds = batched[si]
-                else:
+                # gold / model score per sentence; concatenate keeps each
+                # scorer's dtype, so the decode sees the same values a
+                # per-sentence decode would
+                rel_parts, q_parts = [], []
+                for r, doc_id, ents, cand, _lo, _hi in sent:
                     gold = _gold_rel_tuples(gold_col[r]) if use_gold else None
-                    toks = ((text_col[r].split(" ") if flat
-                             else list(tokens_col[r]))
+                    toks = (text_col[r].split(" ")
                             if cfg.scorer == "model" else None)
                     rel_lg, q_lg = _sentence_logits(
-                        cfg, space, doc_id, turn_idx, cand, gold, ents, toks)
-                    preds = decode_sentence(
-                        ents, cand, rel_lg, q_lg, space, cfg.same_entity,
-                        strict=strict, unidirect=cfg.eval_unidirect)
+                        cfg, space, doc_id, int(turn_idxs[r]), cand, gold,
+                        ents, toks)
+                    rel_parts.append(rel_lg)
+                    q_parts.append(q_lg)
+                rel_all = np.concatenate(rel_parts)
+                q_all = np.concatenate(q_parts)
+                del rel_parts, q_parts  # free before the decode's arrays
+
+            # phase 3 — decode the whole batch (one tensor pipeline per
+            # entity-count group; see decode_sentences_batch)
+            batched = decode_sentences_batch(
+                [(s_[2], s_[3], s_[4], s_[5]) for s_ in sent],
+                rel_all, q_all, space,
+                same_entity=cfg.same_entity, strict=strict,
+                unidirect=cfg.eval_unidirect)
+            for (r, *_), preds in zip(sent, batched):
                 if not preds:
                     continue
-                tokens = (text_col[r].split(" ") if flat
-                          else list(tokens_col[r]))
+                conv_id = conv_ids[r]
+                turn_idx = int(turn_idxs[r])
+                tokens = text_col[r].split(" ")
                 for pi, p in enumerate(preds):
                     m1s, m1e, m2s, m2e, rel, m3s, m3e, qual, sc, qsc = p
                     out.append(
@@ -358,25 +340,20 @@ def score_candidates(df, cfg: PipelineConfig, space: LabelSpace):
         tokenizer = _make_tokenizer(cfg)
         for pdf in batches:
             frames: list[pd.DataFrame] = []
-            flat = "m_starts" in pdf.columns
             ranged = "sub_lo" in pdf.columns
             gold_col = pdf["gold_relations"] if use_gold else None
             for r in range(len(pdf)):
                 conv_id = pdf["conv_id"].iat[r]
                 turn_idx = int(pdf["turn_idx"].iat[r])
-                if flat:
-                    ents = _flat_mention_array(
-                        pdf["m_starts"].iat[r], pdf["m_ends"].iat[r])
-                else:
-                    ents = _mention_array(pdf["mentions"].iat[r])
+                ents = _flat_mention_array(
+                    pdf["m_starts"].iat[r], pdf["m_ends"].iat[r])
                 if ents.shape[0] == 0:
                     continue
                 if cfg.tokenizer == "identity":
                     cand = enumerate_triples(ents, cfg.max_seq_length)
                 else:
-                    toks_r = (pdf["text"].iat[r].split(" ") if flat
-                              else list(pdf["tokens"].iat[r]))
-                    cand = _enumerate(cfg, ents, toks_r, tokenizer)
+                    cand = _enumerate(
+                        cfg, ents, pdf["text"].iat[r].split(" "), tokenizer)
                 if ranged:
                     lo = int(pdf["sub_lo"].iat[r])
                     hi = int(pdf["sub_hi"].iat[r])
@@ -385,10 +362,8 @@ def score_candidates(df, cfg: PipelineConfig, space: LabelSpace):
                     continue
                 doc_id = stable_doc_id(conv_id)
                 gold = _gold_rel_tuples(gold_col.iat[r]) if use_gold else None
-                toks = None
-                if cfg.scorer == "model":
-                    toks = (pdf["text"].iat[r].split(" ") if flat
-                            else list(pdf["tokens"].iat[r]))
+                toks = (pdf["text"].iat[r].split(" ")
+                        if cfg.scorer == "model" else None)
                 rel_lg, q_lg = _sentence_logits(
                     cfg, space, doc_id, turn_idx, cand, gold, ents, toks)
                 f = pd.DataFrame(

@@ -108,17 +108,6 @@ def extract(
     return extract_facts_fused(sents, cfg, space)
 
 
-def materialize_graph(preds: DataFrame) -> dict[str, DataFrame]:
-    """Prediction rows -> the fact/qualifier/compacted tables."""
-    facts = fact_table(preds)
-    return {
-        "facts": facts,
-        "main_triples": main_triples(facts),
-        "fact_qualifiers": qualifier_triples(facts),
-        "compacted": compacted_facts(facts),
-    }
-
-
 def run_pipeline(
     spark,
     transcripts: DataFrame,
@@ -158,7 +147,7 @@ def run_pipeline(
     # every config field that shapes emitted predictions must be in the
     # resume key, or a config change silently serves stale parquet
     fp2 = "|".join(str(x) for x in (
-        fp, cfg.scorer, cfg.hash_seed, space.d, cfg.tokenizer,
+        fp, cfg.scorer, cfg.hash_seed, space.base_labels, cfg.tokenizer,
         cfg.wordpiece_piece_len, cfg.model_checkpoint, cfg.model_variant,
         cfg.max_seq_length, cfg.max_pair_length, cfg.same_entity,
         cfg.log_softmax, cfg.gold_weight, cfg.eval_unidirect))

@@ -1,12 +1,16 @@
 """G4 — MinHash-LSH blocking + connected components."""
 
+import hashlib
+import random
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from text2nkg_spark.datagen import entity_surface
 from text2nkg_spark.operators.canonicalize import (
-    canonicalize_entities, char_shingles, connected_components,
-    lsh_candidate_pairs)
+    _local_lsh_pair_rows, canonicalize_entities, char_shingles,
+    connected_components, lsh_candidate_pairs)
 
 
 def _union_find(n_nodes, edges):
@@ -234,3 +238,152 @@ def test_rekey_broadcast_is_conditional(spark):
     keyed_p = rekey_facts_to_entities(
         facts, small["surface_to_entity"].select("surface", "entity_id"))
     assert "ResolvedHint" in keyed_p._jdf.queryExecution().analyzed().toString()
+
+
+# ---------------------------------------------------------------------------
+# prefix-filtered LSH vs a brute-force reference
+# ---------------------------------------------------------------------------
+
+_THRESHOLDS = (0.3, 0.5, 0.6, 2 / 3, 0.75)
+_CAPS = (1, 2, 5, 4096)
+
+
+def _reference_buckets(surfaces, num_hashes=12, bands=6, n=3, seed=42):
+    """Shingle sets and LSH band buckets, written out from the definition:
+    md5 min-hash per (seed, hash) over the padded char n-grams, one bucket
+    per (band, md5 of the band's min-hashes)."""
+    def md5(x):
+        return hashlib.md5(x.encode("utf-8")).hexdigest()
+
+    rows_per_band = num_hashes // bands
+    sets, buckets = {}, {}
+    for s in surfaces:
+        if s is None:
+            continue
+        p = f"^{s}$"
+        sh = {p[i:i + n] for i in range(len(p) - n + 1)}
+        if not sh:
+            continue
+        sig = [min(md5(f"{seed}|{h}|{g}") for g in sh)
+               for h in range(num_hashes)]
+        for b in range(bands):
+            key = (b, md5(",".join(
+                sig[b * rows_per_band:(b + 1) * rows_per_band])))
+            buckets.setdefault(key, []).append(s)
+        sets[s] = sh
+    return sets, buckets
+
+
+def _reference_lsh_rows(surfaces, threshold, max_bucket):
+    """Plain banded LSH: every pair inside a bucket capped at its first
+    ``max_bucket`` surfaces, kept if its exact Jaccard reaches
+    ``threshold`` — no prefix filter."""
+    sets, buckets = _reference_buckets(surfaces)
+    rows = set()
+    for members in buckets.values():
+        kept = sorted(members)[:max_bucket]
+        for i, a in enumerate(kept):
+            for b in kept[i + 1:]:
+                jac = len(sets[a] & sets[b]) / len(sets[a] | sets[b])
+                if jac >= threshold:
+                    rows.add((a, b, jac))
+    return sorted(rows)
+
+
+def _local_rows(surfaces, threshold, max_bucket):
+    return sorted(_local_lsh_pair_rows(
+        surfaces, 12, 6, 3, threshold, 42, max_bucket))
+
+
+def _distributed_rows(spark, surfaces, threshold, max_bucket):
+    df = spark.createDataFrame([(s,) for s in surfaces], "surface string")
+    return sorted(
+        (r.a, r.b, r.jaccard) for r in lsh_candidate_pairs(
+            df, jaccard_threshold=threshold, max_bucket=max_bucket,
+            local_threshold=0).collect())
+
+
+def _random_vocab(seed):
+    """Near-duplicate families over a small alphabet, plus a NULL and an
+    empty surface (no shingles)."""
+    rng = random.Random(seed)
+    alpha = "abcde fghij"[:rng.randint(3, 11)]
+    bases = ["".join(rng.choice(alpha) for _ in range(rng.randint(1, 14)))
+             for _ in range(rng.randint(1, 10))]
+    vocab = {"", "x"}
+    for _ in range(rng.randint(2, 80)):
+        s = rng.choice(bases)
+        for _ in range(rng.randint(0, 3)):
+            i = rng.randint(0, len(s))
+            s = s[:i] + rng.choice(alpha) + s[i + 1:]
+        vocab.add(s)
+    return sorted(vocab) + [None]
+
+
+def _datagen_vocab(n_uids=300):
+    return [" ".join(entity_surface(uid)) for uid in range(n_uids)]
+
+
+def test_prefix_guard_keeps_pair_at_exact_threshold(spark):
+    """B is a subset of A with |A| = 25 and |B| = 14 shingles, so their
+    Jaccard is exactly 14/25 == 0.56, while 0.56 * 25 evaluates to
+    14.000000000000002.  Without the rounding guard the prefix of A would
+    be one shingle short: its 11 rarest shingles are exactly those not in
+    B, and the pair would be lost."""
+    b = "abcdefghijklmn"
+    a = b + "012345678" + b
+    sets, _ = _reference_buckets([a, b])
+    assert len(sets[a]) == 25 and len(sets[b]) == 14 and sets[b] < sets[a]
+    assert 0.56 * 25 > 14
+    want = [(b, a, 0.56)]
+    assert _reference_lsh_rows([a, b], 0.56, 4096) == want
+    assert _local_rows([a, b], 0.56, 4096) == want
+    assert _distributed_rows(spark, [a, b], 0.56, 4096) == want
+
+
+def test_local_lsh_matches_bucket_reference():
+    """The driver-side twin, prefix filter included, emits exactly the
+    plain capped-bucket rows over seeded random vocabularies."""
+    nonempty = 0
+    for seed in range(40):
+        vocab = _random_vocab(seed)
+        for thr in _THRESHOLDS:
+            for cap in _CAPS:
+                want = _reference_lsh_rows(vocab, thr, cap)
+                assert _local_rows(vocab, thr, cap) == want, (seed, thr, cap)
+                nonempty += bool(want)
+    assert nonempty > 400
+
+
+def test_lsh_datagen_vocabulary_matches_reference():
+    """datagen surfaces (``ent{uid}a`` / ``ent{uid}a ent{uid}b``) share the
+    ``^en``/``ent`` shingles, which pile many surfaces into one bucket —
+    the case the prefix filter thins out."""
+    vocab = _datagen_vocab()
+    _sets, buckets = _reference_buckets(vocab)
+    assert max(len(m) for m in buckets.values()) > 50
+    nonempty = 0
+    for thr in _THRESHOLDS:
+        for cap in _CAPS:
+            want = _reference_lsh_rows(vocab, thr, cap)
+            assert _local_rows(vocab, thr, cap) == want, (thr, cap)
+            nonempty += bool(want)
+    assert nonempty == len(_THRESHOLDS) * (len(_CAPS) - 1)  # cap 1: none
+
+
+@pytest.mark.parametrize("vocab,thr,cap", [
+    ("random:3", 0.3, 4096),
+    ("random:10", 2 / 3, 2),
+    ("random:4", 0.5, 5),
+    ("datagen", 0.6, 4096),
+    ("datagen", 0.3, 5),
+])
+def test_distributed_lsh_matches_bucket_reference(spark, vocab, thr, cap):
+    """The Spark plan, prefix join included, emits exactly the plain
+    capped-bucket rows (random and datagen-shaped vocabularies)."""
+    kind, _, seed = vocab.partition(":")
+    surfaces = _random_vocab(int(seed)) if kind == "random" else (
+        _datagen_vocab())
+    want = _reference_lsh_rows(surfaces, thr, cap)
+    assert want
+    assert _distributed_rows(spark, surfaces, thr, cap) == want

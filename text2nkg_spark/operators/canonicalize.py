@@ -13,7 +13,13 @@ Everything is native Spark SQL:
   the surface strings themselves (component = lexicographic min): any
   fixed-width hash id would silently merge unrelated surfaces near its
   birthday bound (2^26 rows for 52-bit, 2^32 for 64-bit);
-* LSH banding — one groupBy per run over (band_id, band_hash);
+* LSH banding — a pair is a candidate only if the two surfaces share a
+  capped (band_id, band_hash) bucket AND a prefix shingle: each surface's
+  shingles ranked rarest first over the vocabulary, cut to the length any
+  partner with Jaccard >= threshold must meet in (prefix filtering,
+  Bayardo et al., WWW 2007).  Every pair the Jaccard verify keeps shares
+  one, so the output rows equal a plain bucket self-join's, from far fewer
+  candidates when common shingles (``^en``/``ent``) make buckets wide;
 * components — alternating star iterations, each one self-join + groupBy,
   with ``localCheckpoint`` every few rounds to cut lineage.  Iteration count
   is O(log n) — at 10^12 mentions each round is a shuffle sized by the edge
@@ -22,7 +28,9 @@ Everything is native Spark SQL:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+import math
+
+from pyspark.sql import DataFrame, Window, functions as F
 
 
 # distinct-surface count at or below which canonicalize_entities runs the
@@ -71,6 +79,19 @@ def minhash_signature(shingles_col, num_hashes: int, seed: int = 42):
     )
 
 
+def _prefix_len(n: int, jaccard_threshold: float) -> int:
+    """Prefix length of a surface with ``n`` shingles: ``n - o + 1``, where
+    ``o`` is the least overlap ``i`` with ``i / n >= jaccard_threshold``.
+    Jaccard >= t forces overlap >= t * |A | B| >= t * n, so two surfaces
+    that reach t share a shingle among their rarest ``n - o + 1``.  The
+    ``1e-9`` guard stops ``o`` overshooting when ``t * n`` rounds above an
+    integer (``0.56 * 25 == 14.000000000000002``); a smaller ``o`` only
+    lengthens the prefix.  The distributed plan builds the same expression
+    in Spark SQL."""
+    o = max(math.ceil(jaccard_threshold * n - 1e-9), 1)
+    return max(n - o + 1, 0)
+
+
 def _local_lsh_pair_rows(
     surfaces: list,
     num_hashes: int,
@@ -82,14 +103,18 @@ def _local_lsh_pair_rows(
 ) -> list[tuple]:
     """Driver-side twin of the distributed LSH path for SMALL surface
     vocabularies — same md5 strings (hashlib md5 == Spark md5 on UTF-8),
-    same band hashes, same ascending-surface bucket cap, same exact
-    Jaccard verify, so the (a, b, jaccard) rows are bit-identical to the
-    Spark plan's output (asserted in tests/test_canonicalize.py).  Exists
-    because each distributed LSH run costs ~6 fixed-overhead Spark stages
-    (~2.3 s measured for 148 surfaces at sf0.1) — the same
-    size-adaptivity as connected_components' driver union-find."""
+    same band hashes, same ascending-surface bucket cap, same rarest-first
+    prefix shingles, same exact Jaccard verify, so the (a, b, jaccard) rows
+    are bit-identical to the Spark plan's output (asserted in
+    tests/test_canonicalize.py).  Each kept bucket is split by prefix
+    shingle before the pair loop: a pair meeting in no split cannot reach
+    the threshold (see :func:`_prefix_len`), so only the candidate count
+    drops, not a row.  Exists because each distributed LSH run costs ~6
+    fixed-overhead Spark stages (~2.3 s measured for 148 surfaces at
+    sf0.1) — the same size-adaptivity as connected_components' driver
+    union-find."""
     import hashlib
-    from collections import defaultdict
+    from collections import Counter, defaultdict
 
     rows_per_band = num_hashes // bands
 
@@ -125,6 +150,11 @@ def _local_lsh_pair_rows(
             for b in range(bands)]
         info[s] = (set(sh), band_h)
 
+    freq = Counter(g for sh, _band_h in info.values() for g in sh)
+    prefix = {
+        s: sorted(sh, key=lambda g: (freq[g], g))[
+            :_prefix_len(len(sh), jaccard_threshold)]
+        for s, (sh, _band_h) in info.items()}
     buckets: dict = defaultdict(list)
     for s, (_sh, band_h) in info.items():
         for b_id, h in enumerate(band_h):
@@ -133,9 +163,14 @@ def _local_lsh_pair_rows(
     for members in buckets.values():
         members.sort()
         kept = members[:max_bucket] if max_bucket > 0 else members
-        for i in range(len(kept)):
-            for j in range(i + 1, len(kept)):
-                cand.add((kept[i], kept[j]))
+        by_g: dict = defaultdict(list)
+        for s in kept:
+            for g in prefix[s]:
+                by_g[g].append(s)
+        for grp in by_g.values():
+            for i in range(len(grp)):
+                for j in range(i + 1, len(grp)):
+                    cand.add((grp[i], grp[j]))
     rows = []
     for a, b in cand:
         sa, sb = info[a][0], info[b][0]
@@ -180,15 +215,19 @@ def lsh_candidate_pairs(
     surfaces: distinct strings, one per row.  Returns (a, b, jaccard).
     Degenerate band buckets are truncated at ``max_bucket`` rows (surface
     order) — one boilerplate bucket must not become an unsplittable
-    O(W^2) join task (see dedup.cap_bucket_width).
+    O(W^2) join task (see dedup.cap_bucket_width).  Within a kept bucket,
+    only surfaces sharing a prefix shingle pair up (join key
+    ``(band_id, band_hash, g)``, see :func:`_prefix_len`): every pair with
+    Jaccard >= threshold shares one, so the rows are those of the plain
+    bucket self-join, and each join group is a subset of a capped bucket.
 
     Size-adaptive like :func:`connected_components`: at or below
     ``local_threshold`` distinct surfaces the whole LSH runs driver-side
-    (``_local_lsh_pairs`` — bit-identical md5/band/cap/verify semantics),
-    because the distributed plan's ~6 fixed-overhead stages dwarf a
-    few-thousand-entry vocabulary; above it, the shuffle plan below
-    scales to any corpus.  ``local_threshold=0`` forces the distributed
-    path.
+    (``_local_lsh_pair_rows`` — bit-identical md5/band/cap/prefix/verify
+    semantics), because the distributed plan's ~6 fixed-overhead stages
+    dwarf a few-thousand-entry vocabulary; above it, the shuffle plan
+    below scales to any corpus.  ``local_threshold=0`` forces the
+    distributed path.
 
     EAGER when ``local_threshold > 0``: the size probe collects
     ``local_threshold + 1`` rows AT CALL TIME, so calling this function
@@ -225,9 +264,22 @@ def lsh_candidate_pairs(
     minned = exploded_min_md5(
         ex, ["s"], "g", num_hashes,
         lambda h, g: F.concat_ws("|", F.lit(str(seed)), F.lit(str(h)), g))
-    sig = sh.join(minned, "s")
+    # rarest-first order: each surface's shingles sorted by (number of
+    # surfaces holding it, shingle); the first _prefix_len are its prefix.
+    # The sorted array doubles as the verify's shingle set, so the
+    # signature join needs no third input
+    ranked = ex.withColumn(
+        "f", F.count(F.lit(1)).over(Window.partitionBy("g"))
+    ).groupBy("s").agg(
+        F.sort_array(F.collect_set(F.struct("f", "g"))).alias("fg"))
+    sig = minned.join(ranked, "s").withColumn("sh", F.col("fg.g"))
+    n = F.size("sh")
+    plen = F.greatest(
+        n - F.greatest(
+            F.ceil(F.lit(jaccard_threshold) * n - F.lit(1e-9)), F.lit(1))
+        + 1, F.lit(0))
     banded = sig.select(
-        "s", "sh",
+        "s", "sh", F.slice("sh", 1, plen).alias("pre"),
         F.posexplode(F.array(*[
             F.md5(F.concat_ws(",", *[
                 F.col(f"_m{b * rows_per_band + r}")
@@ -237,12 +289,15 @@ def lsh_candidate_pairs(
     from text2nkg_spark.operators.dedup import cap_bucket_width
 
     banded = cap_bucket_width(banded, ["band_id", "band_hash"], "s", max_bucket)
+    keyed = banded.select(
+        "s", "sh", "band_id", "band_hash", F.explode("pre").alias("g"))
     pairs = (
-        banded.alias("l")
+        keyed.alias("l")
         .join(
-            banded.alias("r"),
+            keyed.alias("r"),
             (F.col("l.band_id") == F.col("r.band_id"))
             & (F.col("l.band_hash") == F.col("r.band_hash"))
+            & (F.col("l.g") == F.col("r.g"))
             & (F.col("l.s") < F.col("r.s")),
         )
         .select(
